@@ -3,7 +3,7 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import scala.collection.mutable
 
 /** End-to-end pipeline orchestration — the engine's analog of the
@@ -16,8 +16,9 @@ import scala.collection.mutable
   * final + quarantines at quality/{final,price,quantity} — `quality/final`
   * holds the HIGH-severity quarantine, mirroring the reference's layer names,
   * `cloudformation/05_gluejobs.yml:97-101` → metrics/<subject>), small-file
-  * coalesce (S7), metrics partitioned by restaurant_id (S6), skip-empty-write
-  * probes (P9, `go-quality-elt.py:129-132`), per-stage run manifest (S8,
+  * coalesce (S7), metrics partitioned by restaurant_id (S6), skip-empty
+  * writes (P9, `go-quality-elt.py:129-132`, counted by the write itself —
+  * see [[writeIfNonEmpty]]), per-stage run manifest (S8,
   * `go-incremental-ingest-elt.py:305-318`), landing archival (S10, opt-in
   * via `archiveTo` — see [[archiveLanding]]).
   */
@@ -27,22 +28,41 @@ object PipelineRunner {
 
   final case class RunResult(stages: Seq[StageResult], manifestPath: String)
 
-  /** P9 — conditional write: empty DataFrames skip the data write but still
-    * OVERWRITE the target with an empty (schema-only) parquet, so a re-run
-    * that produces zero rows can't leave a previous run's stale data on disk
-    * disagreeing with the manifest's rows=0. The row count comes from the
-    * just-written parquet footers (a metadata-only count) rather than
-    * re-running the stage plan.
+  /** P9 — conditional write in ONE job: the layer is written as is and its
+    * row count comes from the write's own observation (a `count` observed
+    * in the write's result stage, where Spark applies each partition's
+    * accumulator update once, so a retried task cannot double-count). No
+    * emptiness probe runs before the write and no re-count after it.
+    *
+    * An empty layer still OVERWRITES the target with a schema-only parquet,
+    * so a re-run that produces zero rows can't leave a previous run's stale
+    * data on disk disagreeing with the manifest's rows=0. A non-partitioned
+    * write leaves that file by itself (SPARK-23271); an empty `partitionBy`
+    * write leaves only `_SUCCESS`, so only then is the layer rewritten as
+    * an unpartitioned `limit(0)` — a second job for that case alone.
     */
   private def writeIfNonEmpty(df: DataFrame, path: String, files: Int = 4,
       partitionBy: Seq[String] = Nil): Long = {
-    val empty = df.head(1).isEmpty
-    val toWrite = if (empty) df.limit(0) else df.coalesce(files)
-    val writer = toWrite.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty && !empty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(path)
-    if (empty) 0L else df.sparkSession.read.parquet(path).count()
+    val written = Observation()
+    val writer = df.observe(written, count(lit(1)).as("rows")).coalesce(files)
+      .write.mode(SaveMode.Overwrite)
+    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer).parquet(path)
+    val rows = written.get("rows").asInstanceOf[Long]
+    if (rows == 0L && partitionBy.nonEmpty)
+      df.limit(0).write.mode(SaveMode.Overwrite).parquet(path)
+    rows
   }
+
+  /** A JSON string literal: quote, backslash and every control character
+    * escaped, so a stage name, path or error message can't break the
+    * manifest or the workflow ledger.
+    */
+  private[pipeline] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** How [[archiveLanding]] moves a file. `Rename` is atomic per file and
     * O(1) on HDFS/local — but on object stores (S3A, GCS connectors)
@@ -185,7 +205,7 @@ object PipelineRunner {
     // run manifest (S8) — control plane, driver-side by design
     val manifestPath = s"$outRoot/run_manifest.json"
     val json = stages.map(s =>
-      s"""{"stage":"${s.stage}","rows":${s.rows},"path":"${s.path}"}""")
+      s"""{"stage":${jsonString(s.stage)},"rows":${s.rows},"path":${jsonString(s.path)}}""")
       .mkString("[", ",", "]")
     Files.createDirectories(Paths.get(outRoot))
     Files.write(Paths.get(manifestPath), json.getBytes(StandardCharsets.UTF_8))

@@ -87,7 +87,7 @@ object Workflow {
     }.toSeq
 
     ledgerPath.foreach { p =>
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      import PipelineRunner.{jsonString => q}
       val json = ledger.map(r =>
         s"""{"stage":${q(r.stage)},"state":"${r.state}","attempts":${r.attempts}""" +
           r.error.map(e => s""","error":${q(e.take(500))}""").getOrElse("") + "}")

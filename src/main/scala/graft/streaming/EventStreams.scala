@@ -136,10 +136,12 @@ object EventStreams {
 
   /** Event-time sessionizer emitting CLOSED sessions: per-user state with an
     * event-time timeout at `last_event + gap`; when the watermark passes it,
-    * the session is emitted and the state cleared. This is the
-    * `flatMapGroupsWithState` + `EventTimeTimeout` production shape — output
-    * is append-mode (finalized sessions only), state is bounded by the
-    * watermark. The update-mode twin ([[sessionize]]) emits open sessions.
+    * the session is emitted and the state cleared (at once, if a late file
+    * leaves a session whose timeout the watermark has already passed). This
+    * is the `flatMapGroupsWithState` + `EventTimeTimeout` production shape —
+    * output is append-mode (finalized sessions only), state is bounded by
+    * the watermark. The update-mode twin ([[sessionize]]) emits open
+    * sessions.
     */
   def sessionizeClosed(events: Dataset[Event], gapSeconds: Long,
       watermarkDelay: String = "10 seconds"): Dataset[SessionOut] = {
@@ -180,8 +182,18 @@ object EventStreams {
                     last_us = math.max(st.last_us, us), n_events = st.n_events + 1,
                     total_value = st.total_value + e.value))
             }.get
-            state.update(s)
-            state.setTimeoutTimestamp(s.last_us / 1000 + gapSeconds * 1000)
+            val expiryMs = s.last_us / 1000 + gapSeconds * 1000
+            if (expiryMs < state.getCurrentWatermarkMs()) {
+              // a file that arrives batches late can open (or extend) a
+              // session whose expiry the watermark has already passed;
+              // Spark rejects such a timeout, so close the session now —
+              // what the timeout would have done
+              state.remove()
+              closed += SessionOut(userId, s.start_us, s.last_us, s.n_events, s.total_value)
+            } else {
+              state.update(s)
+              state.setTimeoutTimestamp(expiryMs)
+            }
             closed.result().iterator
           }
       }

@@ -160,6 +160,65 @@ class PipelineGoldenSpec extends SparkTestBase {
     assert(result._1.stages.map(_.stage).count(_.startsWith("metrics_")) == 11)
   }
 
+  test("manifest rows, observed during each write, equal the rows on disk") {
+    // the count now comes from the write's own observation; this is the
+    // property the removed parquet re-count used to give
+    val stages = result._1.stages
+    assert(stages.size == 17, stages.map(_.stage))
+    stages.foreach { s =>
+      assert(s.rows == spark.read.parquet(s.path).count(), s"${s.stage} at ${s.path}")
+    }
+    assert(stages.find(_.stage == "quality_final").get.rows == 6L)
+    assert(stages.find(_.stage == "quality_quarantine").get.rows == 1L)
+  }
+
+  test("one SQL execution per layer write: no emptiness probe, no re-count") {
+    // Pinned total for a run whose layers are all non-empty: the 17 layer
+    // writes, two per `CsvSource.read` of the 3 landing CSVs (Spark's CSV
+    // schema resolution takes the header line, then plans a tokenising
+    // pass even with inferSchema off) and the clvBuckets `localCheckpoint`
+    // build. A reintroduced probe or re-count adds one execution per layer.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val tag = "pipeline-execution-count" // counts only this thread's executions
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobTags.contains(tag) =>
+          starts.add(s.description)
+        case _ =>
+      }
+    }
+    val out = Files.createTempDirectory("graft-jobs").toString
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    val r = try {
+      val run = PipelineRunner.run(spark, itemsCsv, optionsCsv, dateDimCsv, thresholds, out)
+      org.apache.spark.graft.ListenerDrain(sc)
+      run
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+    assert(r.stages.size == 17 && r.stages.forall(_.rows > 0))
+    assert(starts.size == 17 + 2 * 3 + 1, starts.toArray.mkString("\n"))
+  }
+
+  test("run manifest is valid JSON when the output root holds quote and backslash") {
+    val out = Files.createTempDirectory("graft-manifest").toString + "/we\"ird\\root"
+    val r = PipelineRunner.run(spark, itemsCsv, optionsCsv, dateDimCsv, thresholds, out)
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readAllBytes(Paths.get(r.manifestPath)))
+    assert(parsed.size == r.stages.size)
+    r.stages.zipWithIndex.foreach { case (s, i) =>
+      val n = parsed.get(i)
+      assert(n.get("stage").asText == s.stage)
+      assert(n.get("rows").asLong == s.rows)
+      assert(n.get("path").asText == s.path && s.path.startsWith(out))
+    }
+  }
+
   test("S10 archival + empty-overwrite: landing CSVs move, re-runs can't leave stale data") {
     // own copies so the shared `result` fixtures stay untouched
     val dir = Files.createTempDirectory("graft-archival").toString
@@ -177,6 +236,9 @@ class PipelineGoldenSpec extends SparkTestBase {
       "landing CSV arrived under processed/")
     assert(Files.exists(Paths.get(s"$dir/processed/date_dim.csv")))
 
+    assert(Files.exists(Paths.get(s"$out/metrics/clv/restaurant_id=r1")),
+      "the first run leaves restaurant_id partitions for the re-run to clear")
+
     // re-run over the same outRoot with input that transforms to ZERO rows:
     // every output layer must be overwritten empty, not left stale
     val allTest = writeCsv(dir, "all_test.csv",
@@ -185,11 +247,14 @@ class PipelineGoldenSpec extends SparkTestBase {
         |""")
     val r2 = PipelineRunner.run(spark, allTest, s"$dir/processed/order_item_options.csv",
       s"$dir/processed/date_dim.csv", thresholds, out)
-    assert(r2.stages.find(_.stage == "transform").get.rows == 0L)
-    assert(spark.read.parquet(s"$out/transform/order_items").count() == 0,
-      "stale transform rows must be cleared on an empty re-run")
-    assert(spark.read.parquet(s"$out/final").count() == 0,
-      "stale final rows must be cleared on an empty re-run")
+    assert(r2.stages.find(_.stage == "landing_items").get.rows == 1L)
+    val downstream = r2.stages.filterNot(_.stage == "landing_items")
+    assert(downstream.size == 16)
+    downstream.foreach { s =>
+      assert(s.rows == 0L, s"${s.stage} manifest rows")
+      assert(spark.read.parquet(s.path).count() == 0,
+        s"stale ${s.stage} rows must be cleared on an empty re-run")
+    }
   }
 
   test("S10 copy+verify+delete archival works where rename is unsupported") {

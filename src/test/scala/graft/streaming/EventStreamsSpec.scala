@@ -164,6 +164,56 @@ class EventStreamsSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("event-time sessionizer closes a late file's sessions the watermark already passed") {
+    // Five day-files drained one file per trigger, d2 arriving after d3. In
+    // an AvailableNow file drain the late-row filter trails by two triggers
+    // and the eviction watermark by one, so d2's rows pass the filter while
+    // the watermark already stands at d3. A user seen only on d2 opens a
+    // session whose expiry (last event + gap) is behind the watermark: it
+    // must be emitted closed, not rejected as a timeout earlier than the
+    // watermark. (Had d2 followed d4 as well, the late-row filter would
+    // have dropped it whole.)
+    import org.apache.spark.sql.streaming.Trigger
+    val dir = java.nio.file.Files.createTempDirectory("graft-late-file")
+    val landed = dir.resolve("events.parquet")
+    java.nio.file.Files.createDirectories(landed)
+    def day(d: Int): Seq[EventStreams.Event] = for {
+      user <- Seq(1L, 10L + d)
+      k <- 0 until 12 // 08:00 to 11:40, one event every 20 min
+    } yield EventStreams.Event(d * 10000L + user * 100 + k,
+      Timestamp.valueOf(f"2024-01-${d + 1}%02d ${8 + k / 3}%02d:${k % 3 * 20}%02d:00"),
+      user, "click", 1.0)
+    val arrival = Seq(0, 1, 3, 2, 4)
+    val t0 = System.currentTimeMillis() - 3600000L
+    arrival.zipWithIndex.foreach { case (d, slot) =>
+      val tmp = dir.resolve(s"tmp-$d").toString
+      day(d).toDS().coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().filter(f =>
+        f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head.toPath
+      val dst = landed.resolve(s"part-$d.parquet")
+      java.nio.file.Files.move(part, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(t0 + slot * 1000L))
+    }
+    val events = EventStreams.readEventStream(spark, dir.toString, maxFilesPerTrigger = 1)
+      .select("event_id", "ts", "user_id", "event_type", "value").as[EventStreams.Event]
+    val q = EventStreams.sessionizeClosed(events, gapSeconds = 7200)
+      .writeStream.format("memory").queryName("late_file_sessions")
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", dir.resolve("ckpt").toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty, q.exception.map(_.getMessage).getOrElse(""))
+    assert(q.recentProgress.count(_.numInputRows > 0) == arrival.size)
+    val sessions = spark.table("late_file_sessions").as[EventStreams.SessionOut].collect()
+    assert(sessions.forall(_.n_events >= 1), sessions.mkString(";"))
+    assert(sessions.map(_.n_events).sum <= arrival.size * 24L, "an event was counted twice")
+    // the late file's own user is closed with all 12 of its events
+    assert(sessions.filter(_.user_id == 12L).map(_.n_events).toSeq == Seq(12L),
+      sessions.mkString(";"))
+  }
+
   test("streaming exact dedup drops within-watermark replays, state bounded") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EventStreams.Event]
