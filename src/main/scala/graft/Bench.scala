@@ -110,8 +110,7 @@ object Bench {
       // parallelismFirst=false AQE coalesces reduce partitions toward
       // advisoryPartitionSizeInBytes instead of core count — the guide
       // §2.2 scale posture. Env-gated so the same binary can A/B it
-      // without a recompile (a recompile invalidates the DiskCache
-      // generation and pollutes the comparison with cold builds).
+      // without a recompile.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         sys.env.getOrElse("SPARK_GRAFT_AQE_PF", "true"))
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)

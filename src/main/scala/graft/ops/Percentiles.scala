@@ -64,8 +64,8 @@ object Percentiles {
     * value buffering) — estimates average values-per-group; above the
     * bound the operator runs [[Approx]], otherwise [[Exact]]. [[Exact]]
     * and [[Approx]] pass through untouched, so the oracle-gated defaults
-    * never pay the estimate scan. The decision is logged (stderr, the
-    * DiskCache convention) with the numbers that drove it.
+    * never pay the estimate scan. The decision is logged to stderr with
+    * the numbers that drove it.
     */
   def resolve(df: DataFrame, groupCols: Seq[Column], mode: Mode): Mode =
     mode match {

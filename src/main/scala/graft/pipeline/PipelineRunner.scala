@@ -57,7 +57,7 @@ object PipelineRunner {
     * escaped, so a stage name, path or error message can't break the
     * manifest or the workflow ledger.
     */
-  private[pipeline] def jsonString(s: String): String = "\"" + s.flatMap {
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case c if c < ' ' => f"\\u${c.toInt}%04x"

@@ -39,16 +39,15 @@ object DedupQ {
     */
   private def bandPairCounts(spark: SparkSession, dir: String): DataFrame =
     graft.core.Memo.cached(spark, s"q170-bandpairs:$dir") {
-      // cross-JVM artifact (DiskCache, the GraphQ pattern): the tokenize →
+      // session parquet artifact (the GraphQ pattern): the tokenize →
       // shingle → minhash → band expansion is the dedup family's root
-      // build; later JVMs read the published pair table
-      val fp = graft.core.DiskCache.fingerprint(dir, Seq("documents"))
-      graft.core.DiskCache.cached(spark, s"minhash-bandpairs-v1-$fp") {
-        val t = Tables(spark, dir)
-        val bands = Dedup.bandFingerprints(t.documents, "doc_id", "text",
-          NumHashes, RowsPerBand)
-        Dedup.candidatePairsWithCount(bands, "doc_id", MaxBucketSize)
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // build; every consumer reads the written pair table
+      val t = Tables(spark, dir)
+      val bands = Dedup.bandFingerprints(t.documents, "doc_id", "text",
+        NumHashes, RowsPerBand)
+      graft.core.Scratch.parquet(spark,
+        Dedup.candidatePairsWithCount(bands, "doc_id", MaxBucketSize))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
@@ -163,12 +162,11 @@ object DedupQ {
     // — memoizing shares it between q76 and q100's curation for free
     graft.core.Memo.cached(spark, s"q76-components:$dir") {
       // the closure's label-propagation rounds are the family's iterative
-      // block (q76/q100/q221/q136 all ride it) — published cross-JVM, a
-      // warm pass reads (id, component) instead of iterating
-      val fp = graft.core.DiskCache.fingerprint(dir, Seq("documents"))
-      graft.core.DiskCache.cached(spark, s"neardup-components-v1-$fp") {
-        Dedup.connectedComponents(minhashPairs(spark, dir), "doc_a", "doc_b")
-      }
+      // block (q76/q100/q221/q136 all ride it) — written once as a session
+      // artifact, so a reader whose cached blocks were lost re-reads
+      // (id, component) instead of hitting the rounds' checkpoint blocks
+      graft.core.Scratch.parquet(spark,
+        Dedup.connectedComponents(minhashPairs(spark, dir), "doc_a", "doc_b"))
     }
 
   private val neardupComponentsSql = Oracles("dedup", "neardupComponents",

@@ -94,8 +94,8 @@ object PipelineWall {
       * splits keep a few percent of rows) — without it the input-derived
       * task count would land a near-empty output as dozens of tiny files,
       * regressing the small-file control this function exists for.
-      */
-    /** `keyedFence = false` (with `partitionBy`) writes through the plain
+      *
+      * `keyedFence = false` (with `partitionBy`) writes through the plain
       * sized coalesce instead of the keyed repartition: the keyed fence
       * hash-partitions on the key columns ALONE, so a low-cardinality key
       * (severity has 3 values) would collapse the whole upstream compute
@@ -282,14 +282,20 @@ object PipelineWall {
 
     require(ledger.forall(_.state == "SUCCEEDED"),
       s"pipeline wall: non-SUCCEEDED stages: ${ledger.filter(_.state != "SUCCEEDED")}")
-    val j = new StringBuilder
-    j ++= "{\"metric\":\"pipeline_wall\",\"sf_dir\":\"" + sfDir + "\",\"stages\":{"
-    j ++= stageWall.map { case (n, s) =>
-      "\"" + n + "\":" + String.format(Locale.ROOT, "%.2f", Double.box(s))
-    }.mkString(",")
-    j ++= "},\"value\":" + String.format(Locale.ROOT, "%.2f", Double.box(wall))
-    j ++= ",\"unit\":\"sec\"}"
-    println(j.toString)
+    println(resultLine(sfDir, stageWall.toSeq, wall))
     spark.stop()
+  }
+
+  /** The one JSON result line; every string goes through
+    * [[PipelineRunner.jsonString]], since `sfDir` comes from the command line.
+    */
+  private[graft] def resultLine(sfDir: String, stageWall: Seq[(String, Double)],
+      wall: Double): String = {
+    def secs(s: Double) = String.format(Locale.ROOT, "%.2f", Double.box(s))
+    val stages = stageWall.map { case (n, s) =>
+      PipelineRunner.jsonString(n) + ":" + secs(s)
+    }.mkString(",")
+    s"""{"metric":"pipeline_wall","sf_dir":${PipelineRunner.jsonString(sfDir)},""" +
+      s""""stages":{$stages},"value":${secs(wall)},"unit":"sec"}"""
   }
 }

@@ -129,28 +129,14 @@ class PlanShapeSpec extends SparkTestBase {
     // A regression to ANY join (signature self-join or id-keyed cosine
     // joins) or a second exchange re-introduces a pair-set shuffle.
     //
-    // This pins the BUILD shape, so switch DiskCache off for the
-    // inspection: the artifact-backed plan is legitimately a parquet scan
-    // (DiskCacheSpec's territory), which would hide a scoring regression
-    // from this assert either way.
-    sys.props("graft.diskcache.disabled") = "1"
-    graft.core.Memo.release(spark, "q77-pairs")
-    val p = try plan("q77_lsh_neardup") finally {
-      sys.props.remove("graft.diskcache.disabled")
-      graft.core.Memo.release(spark, "q77-pairs")
-    }
+    // The query itself reads the pairs back from their parquet artifact,
+    // which would hide a scoring regression, so this pins the builder.
+    val p = graft.queries.SimilarityQ.lshPairsBuild(graft.core.Tables(spark, sf).embeddings)
+      .queryExecution.executedPlan.toString
     assert(p.contains("MapPartitions"),
       s"q77 must score buckets in-task:\n$p")
     assert(!p.contains("Join"), s"q77 must not join:\n$p")
-    // once the memoized pair build has executed, the cached AQE subtree
-    // prints BOTH "Final Plan" and "Initial Plan" sections — count the
-    // exchange within the final section only (fall back to the whole
-    // string pre-execution, when there is a single tree)
-    val scope = p.indexOf("== Initial Plan ==") match {
-      case -1 => p
-      case i => p.substring(0, i)
-    }
-    assert(scope.sliding("hashpartitioning".length)
+    assert(p.sliding("hashpartitioning".length)
       .count(_ == "hashpartitioning") == 1,
       s"q77 shuffles exactly once (the sig exchange):\n$p")
   }

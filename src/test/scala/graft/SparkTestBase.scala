@@ -7,11 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * Test / fork := true keeps it isolated from sbt).
   */
 trait SparkTestBase extends AnyFunSuite {
-  // route the cross-JVM artifact cache (DiskCache) to a per-JVM temp dir:
-  // suites must exercise the cold builds deterministically, never inherit
-  // a workspace artifact published by an older binary
-  SparkTestBase.isolateCacheDir()
-
   @transient lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -27,13 +22,4 @@ trait SparkTestBase extends AnyFunSuite {
   }
 
   lazy val sf: String = "/root/testdata/sf0.001"
-}
-
-object SparkTestBase {
-  private lazy val cacheDir: String = {
-    val d = graft.core.Scratch.dir("graft-test-artifact-cache")
-    sys.props("graft.cache.dir") = d
-    d
-  }
-  private[graft] def isolateCacheDir(): Unit = { cacheDir; () }
 }

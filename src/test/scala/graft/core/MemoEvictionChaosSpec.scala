@@ -14,12 +14,10 @@ import graft.{SparkEntry, SparkTestBase}
   * between each reader and asserts every reader still matches the
   * no-chaos truth row-for-row.
   *
-  * The truth and chaos phases run under DIFFERENT isolated DiskCache
-  * roots: without that, the truth phase's published components artifact
-  * would serve the chaos phase's "recompute" from disk and the eviction
-  * would exercise nothing (disk artifacts DO survive executor loss in
-  * production, but that resilience is DiskCacheSpec's subject — here the
-  * lineage recompute must stand on its own).
+  * The band-pair and component links write their builds as session
+  * parquet artifacts ([[Scratch.parquet]]), one per memo build: the chaos
+  * phase's fresh memos write their own artifacts, so nothing the truth
+  * phase produced can serve the chaos phase's recompute.
   */
 class MemoEvictionChaosSpec extends SparkTestBase {
 
@@ -42,33 +40,29 @@ class MemoEvictionChaosSpec extends SparkTestBase {
   }
 
   test("dedup memo chain survives total cached-block loss between readers") {
-    val prevCache = sys.props.get("graft.cache.dir")
     try {
-      // truth: cold builds, fresh memos, isolated artifact root
-      sys.props("graft.cache.dir") = Scratch.dir("graft-chaos-truth")
+      // truth: cold builds, fresh memos
       Memo.release(spark)
       val want = chain.map(n => n -> canon(n)).toMap
 
-      // chaos: ANOTHER isolated root (the truth phase's artifacts cannot
-      // mask this phase's recompute), fresh memos; after each reader
-      // materializes, drop EVERY cached block before the next reader.
+      // chaos: fresh memos (and with them fresh artifacts); after each
+      // reader materializes, drop EVERY cached block before the next reader.
       //
       // SCOPE (ADVICE r18, adjudicated r19): within this phase, the
-      // DiskCache-backed links (q76's components, the band-pairs layer)
-      // recover through their own same-phase parquet artifacts, so only
+      // artifact-backed links (q76's components, the band-pairs layer)
+      // recover through their own session parquet artifacts, so only
       // the plain-persist links (q37's pairs) recompute through raw
       // lineage. That split is the ENGINE'S ACTUAL durability design,
       // not a spec gap: the iterative links localCheckpoint their rounds
       // (lineage deliberately truncated — a localCheckpoint block is
-      // not recomputable, by Spark contract), and the DiskCache artifact
+      // not recomputable, by Spark contract), and the parquet artifact
       // IS their cross-reader durability story. An r19 variant that
-      // disabled the store (symlink root, the DiskCacheSpec semantics)
-      // failed precisely there — CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on
-      // the evicted component rounds — confirming pure-lineage recovery
-      // is NOT a property these links have or claim. What this test
-      // pins: the memo layer serves correct rows to late readers after
-      // total block loss, through whichever recovery path each link owns.
-      sys.props("graft.cache.dir") = Scratch.dir("graft-chaos-run")
+      // skipped the artifact failed precisely there —
+      // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the evicted component
+      // rounds — confirming pure-lineage recovery is NOT a property
+      // these links have or claim. What this test pins: the memo layer
+      // serves correct rows to late readers after total block loss,
+      // through whichever recovery path each link owns.
       Memo.release(spark)
       val got = chain.map { n =>
         val r = canon(n)
@@ -85,10 +79,6 @@ class MemoEvictionChaosSpec extends SparkTestBase {
           s"$n diverged from the no-chaos truth after block eviction")
       }
     } finally {
-      prevCache match {
-        case Some(v) => sys.props("graft.cache.dir") = v
-        case None => sys.props -= "graft.cache.dir"
-      }
       // later suites must not inherit evicted-but-retained memo entries
       Memo.release(spark)
     }
